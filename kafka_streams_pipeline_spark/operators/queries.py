@@ -22,6 +22,13 @@ BEFORE aggregating, so with the view written partitioned by
 window_start date (see streaming/pipeline.py) the scan partition-
 prunes on time and min/max-skips on gh; the groupBy shuffles only the
 filtered slice, whose size is bounded by cells × windows.
+
+The final merge and the response sort run in ONE task (coalesce(1) +
+sortWithinPartitions, no global orderBy). That is safe at any view
+size: the task reads the map side's partial aggregates, at most
+(keys in range) × (map tasks) rows, and emits one row per key — hours
+in the requested range for history, cells in the covered box for
+snapshot — while scan, filter and partial aggregation stay parallel.
 """
 
 from __future__ import annotations
@@ -52,6 +59,21 @@ _INTERVAL_EXPR = {
     "1month": "INTERVAL 1 MONTH",
     "all": "INTERVAL 30 YEAR",
 }
+# ws_date lower bound per interval: a safe over-approximation of
+# to − interval (months are at most 31 days, years at most 366)
+_INTERVAL_LOWER = {
+    "1day": dt.timedelta(days=1),
+    "1week": dt.timedelta(days=7),
+    "1month": dt.timedelta(days=31),
+    "all": dt.timedelta(days=30 * 366),
+}
+
+
+def _utc_ms(t: dt.datetime) -> int:
+    """Epoch millis of a datetime, naive values read as UTC."""
+    if t.tzinfo is not None:
+        return int(t.timestamp() * 1000)
+    return calendar.timegm(t.timetuple()) * 1000 + t.microsecond // 1000
 
 
 def _utc_lit(t: dt.datetime) -> Column:
@@ -62,52 +84,86 @@ def _utc_lit(t: dt.datetime) -> Column:
     different windows on a non-UTC host. Epoch-millis literals are
     timezone-free.
     """
-    if t.tzinfo is not None:
-        ms = int(t.timestamp() * 1000)
-    else:
-        ms = calendar.timegm(t.timetuple()) * 1000 + t.microsecond // 1000
-    return F.timestamp_millis(F.lit(ms))
+    return F.timestamp_millis(F.lit(_utc_ms(t)))
 
 
-def _with_partition_bounds(
-    view: DataFrame,
-    from_ts: dt.datetime | None,
-    to_ts: dt.datetime | None,
-) -> DataFrame:
-    """Materialized views carry a ws_date partition column
-    (sources/sinks.write_view). Spark cannot infer ws_date bounds from
-    window_start predicates, so derive them here — this is what turns
-    a time-range query into a partition-pruned scan. No-op for
-    in-memory views."""
-    if "ws_date" not in view.columns:
-        return view
-    if from_ts is not None:
-        view = view.where(F.col("ws_date") >= F.lit(from_ts.date().isoformat()))
-    if to_ts is not None:
-        view = view.where(F.col("ws_date") <= F.lit(to_ts.date().isoformat()))
-    return view
+def _utc_sql(t: dt.datetime) -> str:
+    """SQL text of :func:`_utc_lit` (same tz-free epoch-millis literal)."""
+    return f"timestamp_millis({_utc_ms(t)})"
+
+
+# Algebraic merge of partial aggregates (Aggregator.java:17-30), one SQL
+# expression per op. View sums are exact micros multiples
+# (operators/view.build_view), so the merge recovers each group's
+# micros-integer and re-sums as exact longs — order-independent like
+# the view build itself; the divide back to double happens once, after
+# the merge. The D suffix keeps the divisor a double: a bare 1000000.0
+# is a SQL decimal.
+_MICROS_SUM = "sum(CAST(round(`sum` * 1000000) AS BIGINT)) / 1000000.0D"
+_MERGED_SQL = {
+    "count": "sum(`count`)",
+    "sum": _MICROS_SUM,
+    "avg": f"{_MICROS_SUM} / sum(`count`)",
+}
 
 
 def _merged_aggs() -> list[Column]:
-    """Algebraic merge of partial aggregates (Aggregator.java:17-30).
-
-    View sums are exact micros multiples (operators/view.build_view),
-    so the merge recovers each group's micros-integer and re-sums as
-    exact longs — order-independent like the view build itself; the
-    divide back to double happens once, after the merge."""
-    su = F.sum(F.round(F.col("sum") * 1000000).cast("long"))
-    return [
-        F.sum("count").alias("count"),
-        (su / F.lit(1000000.0)).alias("sum"),
-        (su / F.lit(1000000.0) / F.sum("count")).alias("avg"),
-    ]
+    return [F.expr(f"{_MERGED_SQL[op]} AS `{op}`") for op in AGGREGATE_OPS]
 
 
-def _project_op(df: DataFrame, key: str, op: str) -> DataFrame:
-    """Response projection: (key, <op>) — QueryingService.java:205-229
-    picks one field of the aggregate triple (by reflection there; a
-    first-class column reference here, §2.7 F9)."""
-    return df.select(F.col(key), F.col(op))
+# group column → (response key expression, response key name); the
+# response is (key, <op>), one field of the aggregate triple
+# (QueryingService.java:205-229)
+_RESPONSE_KEY = {
+    "window_start": ("unix_millis(window_start)", "timestamp"),
+    "gh": ("gh", "geohash"),
+}
+
+
+def _query(
+    view: DataFrame,
+    op: str,
+    cells: list[str],
+    precision: int,
+    time_sql: list[str],
+    days: tuple[dt.datetime | None, dt.datetime | None],
+    group: str,
+) -> DataFrame:
+    """The shared plan of history, history_interval and snapshot:
+    filter the view by one SQL predicate, merge each ``group``'s
+    partials into ``op`` (A7), and return (key, <op>) ascending by key,
+    sorted in one partition (see the module docstring). Two SQL strings
+    instead of per-term Column calls keep the build to a few Py4J calls.
+
+    All SQL text comes from validated input: base-32 cells
+    (validate_geohashes or the geo cover), epoch-millis integers, ISO
+    dates and AGGREGATE_OPS names. Cells at least ``precision`` long
+    match their truncation exactly, shorter ones as prefixes.
+
+    ``days`` bounds the ws_date partition column of materialized views
+    (sources/sinks.write_view): Spark cannot infer it from window_start
+    predicates, and this is what turns a time-range query into a
+    partition-pruned scan. In-memory views have no ws_date."""
+    exact = [c[:precision] for c in cells if len(c) >= precision]
+    terms = [f"startswith(gh, '{c}')" for c in cells if len(c) < precision]
+    if exact:
+        terms.insert(0, "gh IN (" + ", ".join(f"'{c}'" for c in exact) + ")")
+    where = ["(" + (" OR ".join(terms) or "false") + ")", *time_sql]
+    if "ws_date" in view.columns:
+        lo, hi = days
+        if lo is not None:
+            where.append(f"ws_date >= '{lo.date().isoformat()}'")
+        if hi is not None:
+            where.append(f"ws_date <= '{hi.date().isoformat()}'")
+    key_sql, key = _RESPONSE_KEY[group]
+    return (
+        view.where(" AND ".join(where))
+        .groupBy(group)
+        .agg(F.expr(f"{_MERGED_SQL[op]} AS `{op}`"))
+        .selectExpr(f"{key_sql} AS `{key}`", f"`{op}`")
+        .coalesce(1)
+        .sortWithinPartitions(key)
+    )
 
 
 def history(
@@ -132,20 +188,12 @@ def history(
     validate_aggregate_op(op)
     cells = validate_geohashes(geohashes)
     validate_time_range(from_ts, to_ts)
-    exact = [c[:precision] for c in cells if len(c) >= precision]
-    prefixes = [c for c in cells if len(c) < precision]
-    cond = F.col("gh").isin(exact) if exact else F.lit(False)
-    for p in prefixes:
-        cond = cond | F.col("gh").startswith(p)
-    filtered = _with_partition_bounds(view, from_ts, to_ts).where(cond)
+    time_sql = []
     if from_ts is not None:
-        filtered = filtered.where(F.col("window_start") >= _utc_lit(from_ts))
+        time_sql.append(f"window_start >= {_utc_sql(from_ts)}")
     if to_ts is not None:
-        filtered = filtered.where(F.col("window_start") <= _utc_lit(to_ts))
-    merged = filtered.groupBy("window_start").agg(*_merged_aggs())
-    return _project_op(
-        merged.withColumn("timestamp", F.unix_millis("window_start")), "timestamp", op
-    ).orderBy("timestamp")
+        time_sql.append(f"window_start <= {_utc_sql(to_ts)}")
+    return _query(view, op, cells, precision, time_sql, (from_ts, to_ts), "window_start")
 
 
 def history_interval(
@@ -165,37 +213,22 @@ def history_interval(
     """
     validate_aggregate_op(op)
     validate_interval(interval)
+    cells = validate_geohashes(geohashes)
     if to_ts is None:
         # derive "now" as tz-free epoch millis (collecting a
         # timestamp would round-trip through the OS timezone)
         ms = view.agg(F.max(F.unix_millis("window_start")).alias("m")).collect()[0]["m"]
         to_ts = dt.datetime(1970, 1, 1) + dt.timedelta(milliseconds=ms)
-    to_col = _utc_lit(to_ts)
-    from_col = to_col - F.expr(_INTERVAL_EXPR[interval])
-    # partition lower bound: a safe over-approximation of to-interval
-    _lower = {
-        "1day": dt.timedelta(days=1),
-        "1week": dt.timedelta(days=7),
-        "1month": dt.timedelta(days=31),
-        "all": dt.timedelta(days=30 * 366),
-    }[interval]
+    to_sql = _utc_sql(to_ts)
     try:
-        lower_ts = to_ts - _lower
+        lower_ts = to_ts - _INTERVAL_LOWER[interval]
     except OverflowError:  # "all" near the epoch — clamp, don't crash
         lower_ts = dt.datetime(1, 1, 1)
-    filtered = _with_partition_bounds(view, lower_ts, to_ts).where(
-        (F.col("window_start") >= from_col) & (F.col("window_start") <= to_col)
-    )
-    cells = validate_geohashes(geohashes)
-    exact = [c[:precision] for c in cells if len(c) >= precision]
-    prefixes = [c for c in cells if len(c) < precision]
-    cond = F.col("gh").isin(exact) if exact else F.lit(False)
-    for p in prefixes:
-        cond = cond | F.col("gh").startswith(p)
-    merged = filtered.where(cond).groupBy("window_start").agg(*_merged_aggs())
-    return _project_op(
-        merged.withColumn("timestamp", F.unix_millis("window_start")), "timestamp", op
-    ).orderBy("timestamp")
+    time_sql = [
+        f"window_start >= {to_sql} - {_INTERVAL_EXPR[interval]}",
+        f"window_start <= {to_sql}",
+    ]
+    return _query(view, op, cells, precision, time_sql, (lower_ts, to_ts), "window_start")
 
 
 def snapshot(
@@ -224,20 +257,8 @@ def snapshot(
     north, west, south, east = bbox
     hour = ts.replace(minute=0, second=0, microsecond=0)
     prefixes = geo.cover_bbox_adaptive(north, west, south, east, max_precision=precision)
-    prefixes = sorted({p[:precision] for p in prefixes})
-    exact = [p for p in prefixes if len(p) >= precision]
-    cond = F.col("gh").isin(exact) if exact else F.lit(False)
-    for p in (p for p in prefixes if len(p) < precision):
-        cond = cond | F.col("gh").startswith(p)
-    merged = (
-        _with_partition_bounds(view, hour, hour)
-        .where((F.col("window_start") == _utc_lit(hour)) & cond)
-        .groupBy("gh")
-        .agg(*_merged_aggs())
-    )
-    return _project_op(merged.withColumnRenamed("gh", "geohash"), "geohash", op).orderBy(
-        "geohash"
-    )
+    time_sql = [f"window_start = {_utc_sql(hour)}"]
+    return _query(view, op, prefixes, precision, time_sql, (hour, hour), "gh")
 
 
 def reaggregate_precision(view: DataFrame, precision: int) -> DataFrame:

@@ -1500,7 +1500,15 @@ def kll_quantile_census(
       miscounted m_l or over-eager compaction flips it.
 
     A sketch whose real error exceeded its accounting breaks a rank
-    bit and hash-mismatches the oracle."""
+    bit and hash-mismatches the oracle.
+
+    Raises ValueError unless every q is an int percentile in (0, 100]:
+    the crossing search below only terminates for those, a fractional
+    q would be truncated by ``int(q)``, and q names the ``est{q}`` and
+    ``q{q}_ok`` columns."""
+    bad = [q for q in qs if type(q) is not int or not 0 < q <= 100]
+    if bad:
+        raise ValueError(f"qs must be integer percentiles in (0, 100], got {bad}")
     bounds = kll_error_bounds(counts)
     # The sketch is BOUNDED state (O(k·log(n/k)) rows per series —
     # that is the point of the sketch), so the estimate read is a
@@ -1520,10 +1528,6 @@ def kll_quantile_census(
         vw[r["v"]] = vw.get(r["v"], 0) + wt
         if et not in maxlev or r["level"] > maxlev[et]:
             maxlev[et] = int(r["level"])
-    # the crossing search below only terminates for percentile ranks;
-    # a q > 100 would leave ests shorter than qs and mis-align the
-    # side_rows tuple with its schema (opaque arity error downstream)
-    assert all(0 < int(q) <= 100 for q in qs), qs
     side_rows = []
     for et, vw in per.items():
         items = sorted(vw.items())

@@ -3485,6 +3485,26 @@ def test_kll_small_input_is_exact(spark):
     _kll_exact_rank_check(vals, sketch.collect(), counts, [10, 50, 90])
 
 
+def test_kll_census_rejects_non_percentile_qs(spark):
+    """qs outside (0, 100] or not an int raise ValueError before any
+    job runs, instead of being truncated by int(q) or looping past
+    the crossing search."""
+    from kafka_streams_pipeline_spark.operators.sketches import (
+        kll_build,
+        kll_quantile_census,
+    )
+
+    df = spark.createDataFrame(
+        [("a", v) for v in range(10)], "event_type string, c long"
+    )
+    sketch, counts = kll_build(df)
+    for qs in ((50, 150), (0,), (50.5,), (50.0,), (True,)):
+        with pytest.raises(ValueError, match="integer percentiles"):
+            kll_quantile_census(spark, df, sketch, counts, qs=qs)
+    got = kll_quantile_census(spark, df, sketch, counts, qs=(50,)).collect()
+    assert [r["q50_ok"] for r in got] == [True]
+
+
 def test_kll_edge_distributions(spark):
     """Degenerate shapes the compactor must survive: all-equal
     values (every estimate IS that value), exactly two distinct

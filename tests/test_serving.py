@@ -5,6 +5,7 @@ compatibility (README.md:73-117 curl examples' query-string shape).
 from __future__ import annotations
 
 import json
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -107,6 +108,20 @@ def test_validation_400s(api, path):
     assert code == 400
     assert msg["errorCode"] == 400
     assert msg["errorMessage"]
+
+
+@pytest.mark.parametrize("bad", ["u15'", "u15')", "u15%", "u1 55", "u15--"])
+@pytest.mark.parametrize("tail", ["", "&interval=1week"])
+def test_sql_breakout_geohashes_400(api, bad, tail):
+    """Geohash text reaches the query's SQL predicate only after
+    validation: quote, paren, wildcard, space and comment characters
+    are rejected as invalid geohashes."""
+    cells = urllib.parse.quote(f"u155,{bad}", safe=",")
+    code, msg = _get(
+        f"{api}/api/temperature/aggregate/avg/history?geohashes={cells}{tail}"
+    )
+    assert code == 400
+    assert "invalid geohash" in msg["errorMessage"], msg
 
 
 def test_unknown_route_404(api):

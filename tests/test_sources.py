@@ -912,7 +912,11 @@ def test_stale_lock_reclaim_race_single_winner(tmp_path):
     the fresh lock the faster one just re-created, leaving two live
     'exclusive' holders. The flock'd guard serializes acquisition:
     exactly ONE contender wins, every loser raises StoreLockedError,
-    and the lock file names the winner afterwards."""
+    and the lock file names the winner afterwards.
+
+    Every contender stays alive on a second barrier until all have
+    decided: a contender that exited early would leave a dead pid in
+    the lock, which a later contender correctly reclaims as stale."""
     import json
     import multiprocessing as mp
     import os
@@ -922,7 +926,7 @@ def test_stale_lock_reclaim_race_single_winner(tmp_path):
         _acquire_lock,
     )
 
-    def contender(store, barrier, out_path, idx):
+    def contender(store, barrier, decided, out_path, idx):
         barrier.wait()
         try:
             _acquire_lock(store, f"race-{idx}")
@@ -931,6 +935,7 @@ def test_stale_lock_reclaim_race_single_winner(tmp_path):
             res = ("lost", os.getpid())
         with open(out_path, "w") as f:
             json.dump(res, f)
+        decided.wait(30)
 
     ctx = mp.get_context("fork")
     for it in range(5):
@@ -948,10 +953,12 @@ def test_stale_lock_reclaim_race_single_winner(tmp_path):
             f.write(f"pid={dead} host={socket.gethostname()} op=crash")
 
         n = 4
-        barrier = ctx.Barrier(n)
+        barrier, decided = ctx.Barrier(n), ctx.Barrier(n)
         outs = [str(tmp_path / f"out{it}_{i}.json") for i in range(n)]
         procs = [
-            ctx.Process(target=contender, args=(store, barrier, outs[i], i))
+            ctx.Process(
+                target=contender, args=(store, barrier, decided, outs[i], i)
+            )
             for i in range(n)
         ]
         for p in procs:

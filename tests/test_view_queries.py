@@ -172,6 +172,11 @@ def test_envelope_shape(view):
     assert msg["metadata"] == {"metric": "temperature"}
 
 
+# Request text that would break out of, or comment out, the SQL string
+# literals the query predicate is built from.
+SQL_BREAKOUTS = ["u15'", "u15')", "u15%", "u1 55", "u15--", "u15') OR (true"]
+
+
 def test_validation_errors(view):
     with pytest.raises(QueryValidationError):
         history(view, "median", ["u155"], None, None)
@@ -179,6 +184,11 @@ def test_validation_errors(view):
         history(view, "avg", [], None, None)
     with pytest.raises(QueryValidationError):
         history(view, "avg", ["uAio"], None, None)  # invalid base32 chars
+    for bad in SQL_BREAKOUTS:
+        with pytest.raises(QueryValidationError):
+            history(view, "avg", ["u155", bad], None, None)
+        with pytest.raises(QueryValidationError):
+            history_interval(view, "avg", [bad], "1week", dt.datetime(2024, 1, 9))
     with pytest.raises(QueryValidationError):
         history(
             view, "avg", ["u155"],
@@ -186,3 +196,55 @@ def test_validation_errors(view):
         )
     with pytest.raises(QueryValidationError):
         history_interval(view, "avg", ["u155"], "2weeks")
+
+
+@pytest.fixture(scope="module")
+def grid_view(spark, tmp_path_factory):
+    """A materialized view of 64 cells x 72 hours, written as two
+    appends so every ws_date partition holds several parquet files."""
+    from kafka_streams_pipeline_spark.operators.view import build_view
+    from kafka_streams_pipeline_spark.sources.sinks import read_view, write_view
+
+    b32 = "'0123456789bcdefghjkmnpqrstuvwxyz'"
+    readings = spark.range(64 * 72 * 3).selectExpr(
+        f"concat('u1', substr({b32}, cast(id % 64 div 32 + 1 AS INT), 1),"
+        f" substr({b32}, cast(id % 32 + 1 AS INT), 1), 'bcd') AS geohash",
+        "1704067200000 + (id div 64 % 72) * 3600000 + id % 3 * 60000 AS timestamp",
+        "(id % 97) / 4.0D AS tempVal",
+    )
+    view = build_view(readings).withColumn("half", F.expr("hash(gh) % 2 = 0"))
+    view_dir = str(tmp_path_factory.mktemp("grid") / "view")
+    write_view(view.where("half").drop("half"), view_dir)
+    write_view(view.where("NOT half").drop("half"), view_dir, mode="append")
+    return read_view(spark, view_dir)
+
+
+def test_bounded_sort_has_one_exchange(spark, grid_view):
+    """history, history_interval and snapshot sort their bounded result
+    in one partition: the executed plan keeps the aggregate's single
+    hash exchange and has no range-partition exchange, yet the rows
+    come back strictly ascending by key and equal the same query
+    followed by a global orderBy."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    cells = [r["gh"] for r in grid_view.select("gh").distinct().collect()]
+    assert len(cells) == 64
+    s, w, n, e = geo.decode_bbox("u1")
+    cases = [
+        (history(grid_view, "avg", cells[:20] + ["u11"],
+                 dt.datetime(2024, 1, 1, 5), dt.datetime(2024, 1, 3, 2)),
+         "timestamp"),
+        (history_interval(grid_view, "sum", ["u1"], "1day"), "timestamp"),
+        (snapshot(grid_view, "count", dt.datetime(2024, 1, 2, 7, 45),
+                  (n, w, s, e)),
+         "geohash"),
+    ]
+    for df, key in cases:
+        rows = [tuple(r) for r in df.collect()]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in plan, plan
+        assert final.count("Exchange") == 1, plan
+        assert "rangepartitioning" not in plan.lower(), plan
+        keys = [r[0] for r in rows]
+        assert len(keys) > 10 and all(a < b for a, b in zip(keys, keys[1:])), key
+        assert rows == [tuple(r) for r in df.orderBy(key).collect()], key
