@@ -343,14 +343,13 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch rebuild EXACTLY, not approximately (the pytest twin is
     tests/test_streaming.py::test_stream_matches_batch_view; this row
     makes the driver certify it). Duplicate injection is OFF — the
-    view counts every physical reading. Round 9: the row runs the
-    PRODUCTION micro-batch configuration — state partitions sized to
-    the standing key cardinality (8; every batch commits every state
-    partition, so this is the per-batch fixed-cost lever measured in
-    STREAM_THROUGHPUT_r09) and the RocksDB provider with changelog
-    checkpointing — so the driver oracle certifies the exact
-    deployed path. See streaming/pipeline.py
-    start_file_stream_pipeline."""
+    view counts every physical reading. The row runs the pipeline on
+    its defaults, which ARE the deployed configuration: state
+    partitions derived from the view topology's standing key
+    cardinality, and the RocksDB state store with changelog
+    checkpointing set in the query's own session — so the oracle
+    check certifies the exact deployed path whatever session runs the
+    row. See streaming/pipeline.py start_file_stream_pipeline."""
     import shutil
 
     from kafka_streams_pipeline_spark.streaming.pipeline import (
@@ -368,7 +367,6 @@ def q_streaming_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = start_file_stream_pipeline(
         spark, src, view_dir, ckpt,
         available_now=True, max_files_per_trigger=1,
-        state_partitions=8, rocksdb_state=True,
     )
     if not q.awaitTermination(300):
         q.stop()

@@ -274,7 +274,14 @@ def _oriented_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     endpoint degrees carried as ``d_src``/``d_dst``; ``deg`` is the
     per-node UNDIRECTED degree frame the orientation (and the wedge
     census) derives from. Split out so the skew test can measure the
-    oriented out-degree distribution directly."""
+    oriented out-degree distribution directly.
+
+    Expects a deterministic ``edges`` input: the distinct edge set is
+    evaluated more than once inside the oriented job (probe side and
+    both degree build sides), so a nondeterministic input could join
+    degrees computed from a different snapshot than the edges they
+    are attached to. Static frames, as every caller passes, are
+    safe."""
     # ONE materialization barrier, not two (r17, VERDICT r16 item 6):
     # the old form eagerly checkpointed the distinct edge set first,
     # then ran a second job for the degree join — two sequential job

@@ -74,20 +74,3 @@ def build_view(
         (F.col("sum_u") / F.lit(1000000.0)).alias("sum"),
         (F.col("sum_u") / F.lit(1000000.0) / F.col("count")).alias("avg"),
     )
-
-
-def view_oracle_sql(readings_sql: str, precision: int = DEFAULT_PRECISION) -> str:
-    """DuckDB twin of :func:`build_view` over a readings relation that
-    exposes columns (ts TIMESTAMP, geohash VARCHAR, tempVal DOUBLE)."""
-    return f"""
-        SELECT
-            substring(geohash, 1, {precision})      AS gh,
-            date_trunc('hour', ts)                  AS window_start,
-            count(*)                                AS count,
-            sum(CAST(round(tempVal * 1000000) AS BIGINT)) / 1000000.0
-                                                    AS sum,
-            sum(CAST(round(tempVal * 1000000) AS BIGINT)) / 1000000.0
-                / count(*)                          AS avg
-        FROM ({readings_sql})
-        GROUP BY 1, 2
-    """

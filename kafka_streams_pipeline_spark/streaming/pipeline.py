@@ -75,22 +75,23 @@ def streaming_view_aggregate(
 def _existing_partition_paths(
     spark: SparkSession, view_dir: str, dates: list
 ) -> list[str]:
-    """Which ws_date=<d> partition directories already exist, probed
-    through the Hadoop FileSystem API — works on any Spark-supported
-    store (local FS, HDFS, s3a://, gs://, abfss://), unlike driver-
-    local os.listdir which only sees the driver's disk."""
+    """Which ws_date=<d> partition directories already exist, from ONE
+    listing of the view directory through the Hadoop FileSystem API —
+    works on any Spark-supported store (local FS, HDFS, s3a://, gs://,
+    abfss://), unlike os.listdir, which only sees the local disk. The
+    child paths come back joined into one string, so the Py4J round
+    trips do not grow with the partition count."""
     jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     base = jvm.org.apache.hadoop.fs.Path(view_dir)
-    fs = base.getFileSystem(hconf)
+    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(base):
         return []
-    out = []
-    for d in dates:
-        part = f"{view_dir}/ws_date={d}"
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(part)):
-            out.append(part)
-    return out
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(base))
+    listed = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(paths)
+    children = {p.rsplit("/", 1)[-1] for p in listed.mkString("\n").split("\n")}
+    return [
+        f"{view_dir}/ws_date={d}" for d in dates if f"ws_date={d}" in children
+    ]
 
 
 def upsert_view_batch(view_dir: str):
@@ -136,33 +137,42 @@ def upsert_view_batch(view_dir: str):
     return apply
 
 
-#: org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-#: — Spark's bundled alternative provider; with changelog
-#: checkpointing it uploads per-batch DELTAS instead of full state
-#: snapshots.
+#: Spark's bundled RocksDB state-store provider.
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
+#: The state store every pipeline query runs on, set in the query's
+#: cloned session so it does not depend on the caller's: RocksDB with
+#: changelog checkpointing, which writes one per-batch delta file per
+#: partition and uploads snapshots in the background, instead of
+#: zipping and syncing a full snapshot on every batch.
+STATE_STORE_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
+        "true",
+}
 
 # Standing state-key cardinality of the view topology: distinct
 # geohash cells × live 1-hour windows inside the 24 h grace at the
 # gate scale factor (~120 cells × 24 windows ≈ 2,880 — measured, and
 # flat across sf0.01/sf0.1 because the cell grid, not the event
 # volume, bounds it). The state-partition default derives from THIS,
-# not from data volume: every micro-batch commits every state
-# partition whether or not a key hashed into it, so partitions ≫
-# standing keys buy nothing and pay a per-batch commit each
-# (STREAM_THROUGHPUT_r13: 3.0k events/s at the session's 200 vs 5.7k
-# at 8 — a 1.9× default-knob waste, VERDICT r13 item 5).
+# not from data volume: every micro-batch runs a task and a store
+# load and commit for every state partition whether or not a key
+# hashed into it.
 VIEW_TOPOLOGY_STANDING_KEYS = 2880
-# Target standing keys per state partition. Each partition's
-# per-batch fixed cost (task launch + store open/commit/snapshot) is
-# amortized over its keys; a few hundred keys per partition keeps the
-# fixed cost noise while single partitions stay trivially small
-# (state rows are ~100 B — 400 keys ≈ 40 KB, nowhere near memory
-# pressure even at 1000× the cell grid).
-KEYS_PER_STATE_PARTITION = 400
+# Standing keys per state partition, from the measured per-partition
+# fixed cost (STATE_PARTITION_SWEEP.json, 4-vCPU host, RocksDB with
+# changelog checkpointing): each partition adds F ≈ 375-550 ms of
+# executor time per micro-batch to the serve_ingest catch-up (slope
+# over P = 1, 2, 4, 8; ~130-180 ms of it the state commit), while a
+# key costs c ≈ 0.11-0.20 ms of state update per batch. The catch-up
+# is CPU-bound, so splitting K keys over one more partition pays only
+# once the K·c/2 it takes off the critical path exceeds the F/cores
+# it adds: K ≈ 2F/(c·4) ≈ 1,000-2,500. 1,500 puts the view topology
+# on 2 partitions, inside one wave of cores.
+KEYS_PER_STATE_PARTITION = 1500
 
 
 def default_state_partitions(
@@ -170,11 +180,10 @@ def default_state_partitions(
 ) -> int:
     """State/shuffle partition count for a stateful streaming query,
     derived from its standing key cardinality: one partition per
-    KEYS_PER_STATE_PARTITION keys, floored at 8 (keep a multi-core
-    box busy), capped at 200 (the stock Spark default — beyond it
-    the per-batch commit fan-out is pure overhead for any topology
-    this engine ships)."""
-    return max(8, min(200, -(-standing_keys // KEYS_PER_STATE_PARTITION)))
+    KEYS_PER_STATE_PARTITION keys, at least 1, capped at 200 (the
+    stock Spark default — beyond it the per-batch commit fan-out is
+    pure overhead for any topology this engine ships)."""
+    return max(1, min(200, -(-standing_keys // KEYS_PER_STATE_PARTITION)))
 
 
 def _resolve_state_partitions(
@@ -184,10 +193,10 @@ def _resolve_state_partitions(
 ) -> int:
     """Explicit count wins; otherwise derive from the caller's
     standing-key hint, falling back to the view topology's ~2,880
-    only when no hint is given (ADVICE r14: the bare default
-    silently pinned 8 partitions into EVERY caller's checkpoint
-    forever — Spark refuses to change the count on restart — even
-    for topologies with far more standing keys). The derived value
+    only when no hint is given (a bare default would pin the view
+    topology's count into EVERY caller's checkpoint forever — Spark
+    refuses to change the count on restart — even for topologies
+    with far more standing keys). The derived value
     is logged at what is likely the FIRST start (no checkpoint dir
     yet) so the pinned knob is visible in the record."""
     if state_partitions is not None:
@@ -228,7 +237,6 @@ def start_file_stream_pipeline(
     processing_time: str = "10 seconds",
     state_partitions: int | None = None,
     standing_keys_hint: int | None = None,
-    rocksdb_state: bool = False,
 ) -> StreamingQuery:
     """File-source replay of the ingest topology (json files of
     reading records). Kafka deployments swap the source for
@@ -236,31 +244,30 @@ def start_file_stream_pipeline(
     identical.
 
     ``state_partitions``: number of shuffle/state-store partitions
-    for the stateful aggregate. Every micro-batch commits EVERY
-    state partition (a task + a store commit each, even for
-    partitions no batch key hashes into), so at a 10 s cadence this
-    is the per-batch fixed cost lever: size it to the standing KEY
-    cardinality (cells × live windows), not to the bulk-replay data
-    volume — the two differ by orders of magnitude. Fixed at the
-    stream's FIRST start and pinned by the checkpoint thereafter
-    (Spark refuses to restart with a different value). Default None
-    derives it from ``standing_keys_hint`` when given, else from the
-    view topology's standing key cardinality via
-    ``default_state_partitions`` (VERDICT r13 item 5: the session's
-    200 wasted a measured 1.9× of micro-batch throughput against
-    ~2,880 standing keys; ADVICE r14: a caller replaying a topology
-    with far more standing keys should pass the hint, because the
-    derived count is pinned into the checkpoint forever). The
-    derived value is logged at first start so the pinned knob is
-    visible. Results are partition-count-independent, only the
-    per-batch fixed cost moves.
+    for the stateful aggregate. Every micro-batch runs EVERY state
+    partition (a task plus a store load and commit each, even for
+    partitions no batch key hashes into), so this is the per-batch
+    fixed-cost lever: size it to the standing KEY cardinality
+    (cells × live windows), not to the bulk-replay data volume — the
+    two differ by orders of magnitude. Fixed at the stream's FIRST
+    start and pinned by the checkpoint thereafter (Spark refuses to
+    restart with a different value). Default None derives it from
+    ``standing_keys_hint`` when given, else from the view topology's
+    standing key cardinality via ``default_state_partitions``. A
+    caller replaying a topology with far more standing keys should
+    pass the hint, because the derived count is pinned into the
+    checkpoint forever; the derived value is logged at first start.
+    Results are partition-count-independent, only the per-batch
+    fixed cost moves.
 
-    ``rocksdb_state``: use the RocksDB state-store provider with
-    changelog checkpointing (per-batch delta uploads instead of full
-    HDFS-backed snapshots). Also pinned at first start via the
-    checkpoint. Both knobs are applied through the streaming query's
-    cloned session conf, so they never leak into the caller's
-    session."""
+    The aggregate always runs on the RocksDB state store with
+    changelog checkpointing (``STATE_STORE_CONF``). The store and
+    the partition count are set in the query's cloned session conf,
+    so the query does not depend on the caller's session and nothing
+    leaks into it. A RocksDB checkpoint written without changelog
+    checkpointing keeps its partition count and switches to deltas
+    on restart; a checkpoint keeps the provider class it was started
+    with, which Spark records in its offset log."""
     reader = spark.readStream.schema(READING_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -285,19 +292,14 @@ def start_file_stream_pipeline(
     # StreamExecution clones the session at start(), freezing the
     # confs below into the query; restoring afterwards keeps the
     # caller's session untouched.
-    overrides: dict[str, str | None] = {}
-    state_partitions = _resolve_state_partitions(
-        state_partitions, standing_keys_hint, checkpoint_dir
-    )
-    overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
-    if rocksdb_state:
-        overrides["spark.sql.streaming.stateStore.providerClass"] = (
-            ROCKSDB_PROVIDER
-        )
-        overrides[
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled"
-        ] = "true"
+    overrides = {
+        "spark.sql.shuffle.partitions": str(
+            _resolve_state_partitions(
+                state_partitions, standing_keys_hint, checkpoint_dir
+            )
+        ),
+        **STATE_STORE_CONF,
+    }
     saved = {
         k: spark.conf.get(k, None) for k in overrides
     }

@@ -61,7 +61,10 @@ def test_stream_matches_batch_view(spark, sf_dir, readings_rows, tmp_path_factor
         spark, src, view, ckpt, available_now=True, max_files_per_trigger=1
     )
     await_replay(q, 300)
+    _assert_view_equals_build_view(spark, sf_dir, view)
 
+
+def _assert_view_equals_build_view(spark, sf_dir, view):
     got = {
         (r["gh"], r["window_start"]): (r["count"], r["sum"], r["avg"])
         for r in read_view(spark, view).collect()
@@ -192,6 +195,113 @@ def test_stream_restart_resumes_from_checkpoint(
     await_replay(q2, 300)
     n2 = read_view(spark, view).agg(F.sum("count")).collect()[0][0]
     assert n2 == len(readings_rows)
+
+
+def _state_files(ckpt, suffix):
+    """{state partition: names of its files ending in ``suffix``} in
+    the aggregate's state store."""
+    root = os.path.join(ckpt, "state", "0")
+    return {
+        int(p): sorted(f for f in os.listdir(os.path.join(root, p))
+                       if f.endswith(suffix))
+        for p in os.listdir(root) if p.isdigit()
+    }
+
+
+def test_restart_of_full_snapshot_checkpoint_under_defaults(
+    spark, sf_dir, readings_rows, tmp_path_factory, monkeypatch
+):
+    """A checkpoint written with 8 state partitions and changelog
+    checkpointing OFF (full RocksDB snapshots, the pipeline's earlier
+    defaults) restarts under today's defaults: it keeps its 8
+    partitions, switches to per-batch changelog deltas, and its view
+    still equals the batch rebuild."""
+    from kafka_streams_pipeline_spark.streaming import pipeline
+
+    base = tmp_path_factory.mktemp("stream-restart-changelog")
+    src, view, ckpt = str(base / "src"), str(base / "view"), str(base / "ckpt")
+    half = len(readings_rows) // 2
+    _write_chunks(readings_rows[:half], src, n_chunks=1)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "STATE_STORE_CONF", {
+            **pipeline.STATE_STORE_CONF,
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled": "false",
+        })
+        q = start_file_stream_pipeline(
+            spark, src, view, ckpt, available_now=True, state_partitions=8
+        )
+        await_replay(q, 300)
+    assert sorted(_state_files(ckpt, ".zip")) == list(range(8))
+    assert not any(_state_files(ckpt, ".changelog").values())
+
+    _write_chunks(readings_rows[half:], src + "/more", n_chunks=1)
+    os.rename(src + "/more/chunk0.json", src + "/chunk_late.json")
+    assert pipeline.default_state_partitions() != 8
+    q2 = start_file_stream_pipeline(spark, src, view, ckpt, available_now=True)
+    await_replay(q2, 300)
+    deltas = _state_files(ckpt, ".changelog")
+    assert sorted(deltas) == list(range(8))
+    assert all(deltas.values())
+    _assert_view_equals_build_view(spark, sf_dir, view)
+
+
+def test_pipeline_state_store_ignores_caller_session(
+    spark, readings_rows, tmp_path
+):
+    """The stateful aggregate runs on RocksDB with changelog
+    checkpointing even from a session with Spark's stock state-store
+    settings, and the caller's session conf is left as it was."""
+    from kafka_streams_pipeline_spark.streaming.pipeline import (
+        ROCKSDB_PROVIDER,
+        STATE_STORE_CONF,
+    )
+
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    changelog = (
+        "spark.sql.streaming.stateStore.rocksdb."
+        "changelogCheckpointing.enabled"
+    )
+    keys = (*STATE_STORE_CONF, "spark.sql.shuffle.partitions")
+    vanilla = spark.newSession()
+    for k in keys:
+        vanilla.conf.unset(k)
+    before = {k: vanilla.conf.get(k, None) for k in keys}
+    assert before[provider] != ROCKSDB_PROVIDER
+    assert before[changelog] is None  # Spark's default: off
+
+    src, view, ckpt = (str(tmp_path / d) for d in ("src", "view", "ckpt"))
+    _write_chunks(readings_rows, src, n_chunks=2)
+    q = start_file_stream_pipeline(
+        vanilla, src, view, ckpt, available_now=True, max_files_per_trigger=1
+    )
+    query_conf = q._jsq.streamingQuery().sparkSessionForStream().conf()
+    assert query_conf.get(provider) == ROCKSDB_PROVIDER
+    assert query_conf.get(changelog) == "true"
+    await_replay(q, 300)
+    assert {k: vanilla.conf.get(k, None) for k in keys} == before
+    assert all(_state_files(ckpt, ".changelog").values())
+
+
+def test_existing_partition_paths(spark, tmp_path):
+    """The upsert's partition probe returns exactly the batch dates
+    whose ws_date= directory exists, in batch order, and nothing
+    before the view directory exists."""
+    import datetime as dt
+
+    from kafka_streams_pipeline_spark.streaming.pipeline import (
+        _existing_partition_paths,
+    )
+
+    view = str(tmp_path / "view")
+    dates = [dt.date(2024, 1, d) for d in (3, 2, 1)]
+    assert _existing_partition_paths(spark, view, dates) == []
+    for d in ("2024-01-01", "2024-01-03", "2024-01-09"):
+        os.makedirs(f"{view}/ws_date={d}")
+    open(f"{view}/_SUCCESS", "w").close()
+    assert _existing_partition_paths(spark, view, dates) == [
+        f"{view}/ws_date=2024-01-03", f"{view}/ws_date=2024-01-01",
+    ]
 
 
 def test_processing_time_trigger(spark, readings_rows, tmp_path_factory):
@@ -1021,19 +1131,20 @@ def test_streaming_semi_join_emits_once_from_state(spark, tmp_path):
 
 
 def test_default_state_partitions_derivation():
-    """State-partition default derives from standing key cardinality
-    (VERDICT r13 item 5): one partition per ~400 keys, floor 8,
-    cap 200 — and the view topology's ~2,880 standing keys land on
-    8, the measured 1.9x-throughput knob."""
+    """State-partition default derives from standing key cardinality:
+    one partition per 1,500 keys, floor 1, cap 200 — and the view
+    topology's ~2,880 standing keys land on 2, one wave of a 4-core
+    host."""
     from kafka_streams_pipeline_spark.streaming.pipeline import (
         VIEW_TOPOLOGY_STANDING_KEYS,
         default_state_partitions,
     )
 
-    assert default_state_partitions(VIEW_TOPOLOGY_STANDING_KEYS) == 8
-    assert default_state_partitions(1) == 8          # floor
-    assert default_state_partitions(400 * 50) == 50  # linear middle
-    assert default_state_partitions(10**9) == 200    # cap
+    assert default_state_partitions(VIEW_TOPOLOGY_STANDING_KEYS) == 2
+    assert default_state_partitions(1) == 1            # floor
+    assert default_state_partitions(1500 * 50) == 50   # linear middle
+    assert default_state_partitions(1500 * 50 + 1) == 51
+    assert default_state_partitions(10**9) == 200      # cap
 
 
 def test_streaming_acf_short_series_rows_match_batch(spark, tmp_path):
@@ -1093,12 +1204,12 @@ def test_resolve_state_partitions_hint(tmp_path):
     ckpt = str(tmp_path / "ckpt-not-yet")
     # explicit wins
     assert _resolve_state_partitions(64, 1_000_000, ckpt) == 64
-    # hint drives the derivation: 40k keys / 400 per partition = 100
-    assert _resolve_state_partitions(None, 40_000, ckpt) == 100
-    # huge hint caps at 200, tiny floors at 8
+    # hint drives the derivation: 150k keys / 1,500 per partition = 100
+    assert _resolve_state_partitions(None, 150_000, ckpt) == 100
+    # huge hint caps at 200, tiny floors at 1
     assert _resolve_state_partitions(None, 10_000_000, ckpt) == 200
-    assert _resolve_state_partitions(None, 100, ckpt) == 8
-    # no hint: the view topology default (~2,880 keys -> 8)
+    assert _resolve_state_partitions(None, 100, ckpt) == 1
+    # no hint: the view topology default (~2,880 keys -> 2)
     assert _resolve_state_partitions(None, None, ckpt) == (
         default_state_partitions()
     )

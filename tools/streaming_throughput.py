@@ -133,19 +133,16 @@ def main() -> None:
     payload = {
         "sf_dir": SF_DIR,
         "bulk": run_mode(spark, rows, 1, "bulk"),
-        # "micro" runs the DEFAULT knobs — which as of r14 derive the
-        # state-partition count from the view topology's standing key
-        # cardinality (default_state_partitions() = 8 for ~2,880
-        # keys; VERDICT r13 item 5). The legacy-200 leg records what
-        # the stock Spark shuffle default costs on the same replay.
+        # "micro" runs the DEFAULT knobs: the state-partition count
+        # derived from the view topology's standing key cardinality
+        # (default_state_partitions() = 2 for ~2,880 keys) on the
+        # RocksDB store with changelog checkpointing. The legacy-200
+        # leg records what the stock Spark shuffle default costs on
+        # the same replay.
         "micro": run_mode(spark, rows, args.chunks, "micro"),
         "micro_legacy200": run_mode(
             spark, rows, args.chunks, "micro_legacy200",
             state_partitions=200,
-        ),
-        "micro_rocksdb": run_mode(
-            spark, rows, args.chunks, "micro_rocksdb",
-            rocksdb_state=True,
         ),
         "note": (
             "full topology incl. checkpoint + per-batch parquet view "
